@@ -10,7 +10,9 @@
 #                              -> bench_clobber_check.sh
 # plus the always-on gates: full Verify vs DuckDB oracles, unit specs,
 # and the structural plan assertions for the candidate-volume queries.
-set -e
+# pipefail: steps 2-6 pipe a check into tail/grep, and a failing check
+# must fail the preflight, not just the filter behind it.
+set -eo pipefail
 cd "$(dirname "$0")/.."
 SF=${1:-/root/testdata/sf0.01}
 OUT=${2:-/tmp/preflight_out}

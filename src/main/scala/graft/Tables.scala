@@ -151,7 +151,13 @@ object GraftSession {
     * fast local disks as shuffle data.
     */
   def scratchDir(spark: SparkSession): String =
-    spark.conf.getOption("spark.local.dir")
+    scratchDirOf(spark.conf.getOption("spark.local.dir"))
+
+  /** `spark.local.dir` is a comma-separated list of roots (as Spark
+    * itself reads it); gate spills go under the first one.
+    */
+  private[graft] def scratchDirOf(localDir: Option[String]): String =
+    localDir.flatMap(_.split(",").map(_.trim).find(_.nonEmpty))
       .getOrElse(System.getProperty("java.io.tmpdir"))
 
   /** Apply graft-required runtime confs to an externally-built session

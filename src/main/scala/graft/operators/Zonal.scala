@@ -245,13 +245,6 @@ object Zonal {
       .groupBy(col("shape_id"), col("vals"))
       .agg((sum(col("sum")) / sum(col("cnt"))).as("avg_v"))
 
-  /** CHANGELOG-era `RasterGroupedSum` (reference CHANGELOG.md:151-153). */
-  def groupedSum(spark: SparkSession, layout: Layout, groupLayers: Seq[Layer],
-                 target: Layer, aoi: MultiPolygon,
-                 opts: Rasterizer.Options = Rasterizer.DEFAULT): DataFrame =
-    keyed(aggPlane(layout, groupLayers, Some(target), Seq(aoi), opts), groupLayers)
-      .groupBy(col("vals")).agg(sum(col("sum")).as("sum_v"))
-
   /** Ungrouped ops key on `List(0)` (reference Geoprocessing.scala:275). */
   private def keyed(plane: DataFrame, groupLayers: Seq[Layer]): DataFrame =
     if (groupLayers.nonEmpty) plane else plane.withColumn("vals", array(lit(0)))

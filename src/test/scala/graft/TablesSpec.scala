@@ -63,4 +63,10 @@ class TablesSpec extends SparkSpec {
     val micros = df.select(org.apache.spark.sql.functions.unix_micros($"ts")).head().getLong(0)
     assert(micros == 1704067200000001L, s"nanos→micros truncation drifted: $micros")
   }
+
+  test("scratchDir takes the first root of a comma-separated spark.local.dir") {
+    assert(GraftSession.scratchDirOf(Some("dirA,dirB")) == "dirA")
+    assert(GraftSession.scratchDirOf(Some("dirA")) == "dirA")
+    assert(GraftSession.scratchDirOf(None) == System.getProperty("java.io.tmpdir"))
+  }
 }

@@ -104,13 +104,6 @@ class ZonalSpec extends AnyFunSuite with SparkSpec {
     assert(math.abs(got(s"List(${NoData.INT})") - gn.sum / gn.size) < 1e-12)
   }
 
-  test("groupedSum") {
-    val df = Zonal.groupedSum(spark, layout, Seq(layer("cb")), layer("cd"), aoi)
-    val got = Render.toResultDouble(df)
-    val g1 = (for (gc <- 1 to 6; gr <- 1 to 3) yield (gc + gr).toDouble).sum
-    assert(math.abs(got("List(1)") - g1) < 1e-12)
-  }
-
   test("summary: min/max skip NODATA, avg counts it as 0") {
     val df = Zonal.summary(spark, layout, Seq(layer("cd")), aoi)
     val rows = df.collect()
