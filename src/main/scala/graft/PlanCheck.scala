@@ -318,9 +318,9 @@ object PlanCheck {
     * pinned structurally instead of by a one-off rehearsal note. The
     * check builds the exact q34 op set twice — 4 shapes and 32 shapes —
     * and requires the physical-plan node census (node name → count) to
-    * be IDENTICAL: shapes ride the broadcast mask plane inside one
-    * unioned plan, so adding shapes must never add scans, joins, or
-    * unions (a per-shape rescan/loop would multiply scan nodes 8×
+    * be IDENTICAL: shapes ride inside the one fused
+    * `ZonalAggregateExec`, so adding shapes must never add scans,
+    * joins, or unions (a per-shape rescan/loop would multiply scan nodes 8×
     * here and 1000× on a real watershed batch). CartesianProduct is
     * forbidden as everywhere else.
     */

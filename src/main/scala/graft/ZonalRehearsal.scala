@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * CHANGELOG.md:82-91 the 61-HUC-12 /multi batch):
   *   - groupedCount over nlcd×soil on the AOI
   *   - multiBatch: 32 shapes × {count(nlcd,soil), count(soil),
-  *     avg(slope|soil), lines(nlcd)} as ONE unioned plan
+  *     avg(slope|soil), lines(nlcd)} as ONE fused pass
   * Wall seconds print as JSON lines for BENCH_NOTES.md, against the
   * reference's 120 s request ceiling (application.conf:12-18).
   */
@@ -78,8 +78,8 @@ object ZonalRehearsal {
 
       // flagship RasterGroupedCount: nlcd×soil over the AOI —
       // instrumented for the SHUFFLE-ROW claim (round-13 judge item
-      // 6): the flatMap must emit O(tiles × groups) rows and the
-      // exchange must carry no more than that (map-side partial
+      // 6): ZonalAggregateExec must emit O(tiles × groups) rows and
+      // the exchange must carry no more than that (map-side partial
       // aggregation can only shrink it) — never O(pixels)
       shuffleRecords.set(0L)
       val gcLayers = layers(Seq("nlcd", "soil"), aoi)
@@ -90,23 +90,24 @@ object ZonalRehearsal {
       // are counted before the assertion reads them
       org.apache.spark.graft.BusDrain.drain(spark.sparkContext)
       val shuf = shuffleRecords.get
-      // exact flatMap emission count: the pre-aggregation plane,
-      // recounted OUTSIDE the timed window (same deterministic rows)
-      val flatMapRows = Zonal.aggPlane(metas("nlcd").layout, gcLayers,
+      // exact ZonalAggregateExec emission count: the pre-aggregation
+      // plane, recounted OUTSIDE the timed window (same deterministic
+      // rows)
+      val planeRows = Zonal.aggPlane(metas("nlcd").layout, gcLayers,
         None, Seq(aoi), graft.raster.Rasterizer.DEFAULT).count()
       val nTiles = spec.layoutCols.toLong * spec.layoutRows
       // group-tuple ceiling: 14 nlcd × (8 soil + NODATA) = 126
       val bound = nTiles * 126L
-      require(flatMapRows <= bound,
-        s"flatMap emitted $flatMapRows rows > tiles*groups bound $bound " +
+      require(planeRows <= bound,
+        s"ZonalAggregateExec emitted $planeRows rows > tiles*groups bound $bound " +
           "- the tile-level partial aggregation is not holding")
       require(shuf <= bound,
         s"shuffle carried $shuf records > tiles*groups bound $bound")
-      require(gcRows.getLong(1) > flatMapRows * 100,
+      require(gcRows.getLong(1) > planeRows * 100,
         "masked pixels should dwarf the shuffled plane by >=100x at this scale")
-      println(s"""{"query":"zonal_grouped_count","k":$k,"cells":$cells,"sec":${f"$tGc%.2f"},"groups":${gcRows.getLong(0)},"masked_pixels":${gcRows.getLong(1)},"build_sec":${f"$tBuild%.2f"},"flatmap_rows":$flatMapRows,"shuffle_records":$shuf,"tilesxgroups_bound":$bound}""")
+      println(s"""{"query":"zonal_grouped_count","k":$k,"cells":$cells,"sec":${f"$tGc%.2f"},"groups":${gcRows.getLong(0)},"masked_pixels":${gcRows.getLong(1)},"build_sec":${f"$tBuild%.2f"},"plane_rows":$planeRows,"shuffle_records":$shuf,"tilesxgroups_bound":$bound}""")
 
-      // the /multi batch: 32 shapes × 4 ops, ONE unioned plan over
+      // the /multi batch: 32 shapes × 4 ops, ONE fused pass over
       // shared scans (the reference's order-of-magnitude claim)
       val shapes = ZonalFixture.subShapes(spec)
       val union = graft.geom.GeomOps.unionAll(shapes)

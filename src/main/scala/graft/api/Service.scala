@@ -194,7 +194,7 @@ object Service {
     JObject(m.toList.sortBy(_._1).map { case (k, v) => k -> (JDouble(v): JValue) })
 
   /** `POST /multi` — the batch orchestrator (Geoprocessing.scala:21-89):
-    * layers fetched ONCE for the union of all shapes and cached; each
+    * layers fetched ONCE for the union of all shapes; each
     * (shape, operation) pair computes over the shared scan; results
     * nest as HucID → label → key → Double (Ints widened,
     * Geoprocessing.scala:56).
@@ -209,10 +209,10 @@ object Service {
     val streamLines = req.streamLines.map(
       GeomOps.toLines(_, from, Projections.ConusAlbers))
 
-    // one unioned plan: every operation becomes a multi-shape batch op
-    // over the shared cached scans (SURVEY §3.2) — a single Spark job
-    // instead of |shapes| × |operations| jobs. Validated BEFORE any
-    // scan is cached so a bad operation never leaks a persisted layer.
+    // one fused pass: every operation becomes a spec of ONE
+    // ZonalAggregateExec that reads each raster's tiles once (SURVEY
+    // §3.2) — a single plan instead of |shapes| × |operations| jobs.
+    // Validated BEFORE any scan is planned.
     val batchOps: Seq[Zonal.BatchOp] = req.operations.map { op =>
       op.name match {
         case "RasterGroupedCount" =>
@@ -231,36 +231,25 @@ object Service {
       }
     }
     val layout = cat.layout(rasterIds)
-    // shared scan: one cached cropped DataFrame per raster id. Built
-    // incrementally inside the try so a failure while fetching a later
-    // raster still unpersists the layers already cached for earlier ones.
-    val shared = scala.collection.mutable.Map.empty[String, Zonal.Layer]
-    try {
-      rasterIds.foreach { id =>
-        val l = cat.layers(Seq(id), unionAoi).head
-        shared(id) = l.copy(df = l.df.persist())
-      }
-      val rows = Zonal.multiBatch(cat.spark, layout, shared.toMap, shapes.map(_._2),
-        streamLines, batchOps).collect()
-      val hucIds = shapes.map(_._1)
-      val nested: Map[String, Map[String, Map[String, Double]]] =
-        rows.groupBy(r => hucIds(r.getInt(0))).map { case (huc, rs) =>
-          huc -> rs.groupBy(_.getString(1)).map { case (label, ls) =>
-            label -> ls.map(r => r.getString(2) -> r.getDouble(3)).toMap
-          }
+    // shared scan: one cropped DataFrame per raster id, each scanned
+    // once by the fused plan — nothing to cache or unpersist
+    val shared = rasterIds.map(id => id -> cat.layers(Seq(id), unionAoi).head).toMap
+    val rows = Zonal.multiBatch(cat.spark, layout, shared, shapes.map(_._2),
+      streamLines, batchOps).collect()
+    val hucIds = shapes.map(_._1)
+    val nested: Map[String, Map[String, Map[String, Double]]] =
+      rows.groupBy(r => hucIds(r.getInt(0))).map { case (huc, rs) =>
+        huc -> rs.groupBy(_.getString(1)).map { case (label, ls) =>
+          label -> ls.map(r => r.getString(2) -> r.getDouble(3)).toMap
         }
-      // operations yielding no rows for a shape still appear as {} —
-      // reference tolerance for non-intersecting shapes (CHANGELOG:71-79)
-      val complete = hucIds.map { huc =>
-        val labels = req.operations.map(_.label)
-        val present = nested.getOrElse(huc, Map.empty)
-        huc -> labels.map(l => l -> present.getOrElse(l, Map.empty[String, Double])).toMap
-      }.toMap
-      Serialization.write(complete)
-    } finally {
-      // unpersist on every exit path — a long-lived service must not
-      // leak cached scans when a query fails mid-flight
-      shared.values.foreach(_.df.unpersist())
-    }
+      }
+    // operations yielding no rows for a shape still appear as {} —
+    // reference tolerance for non-intersecting shapes (CHANGELOG:71-79)
+    val complete = hucIds.map { huc =>
+      val labels = req.operations.map(_.label)
+      val present = nested.getOrElse(huc, Map.empty)
+      huc -> labels.map(l => l -> present.getOrElse(l, Map.empty[String, Double])).toMap
+    }.toMap
+    Serialization.write(complete)
   }
 }

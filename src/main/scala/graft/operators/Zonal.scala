@@ -1,29 +1,37 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
-import org.locationtech.jts.geom.{Geometry, MultiLineString, MultiPolygon}
+import org.apache.spark.sql.graft.{LineMasks, PolygonMasks, ZonalAggregate, ZonalMasks, ZonalOpSpec, ZonalShape, ZonalWork}
+import org.locationtech.jts.geom.{LineString, MultiLineString, MultiPolygon}
 
 import graft.geom.GeomOps
-import graft.raster.{Layout, NoData, Rasterizer}
+import graft.raster.{Layout, Rasterizer}
 import graft.sources.TileCatalog.RasterMeta
 
 /** The reference's zonal-statistics operators (SURVEY §2.1 rows A–F)
   * as Spark plans over the tiles table.
   *
   * Shape of every plan:
-  *   pruned scan(s) → full-outer align join on SpatialKey (NODATA
-  *   fill) → rasterize + TILE-LEVEL PARTIAL AGGREGATION in one flatMap
-  *   → tiny final Catalyst aggregation.
+  *   pruned scan per distinct raster → union → (one exchange + sort on
+  *   SpatialKey when an op reads several rasters) → ONE
+  *   `ZonalAggregateExec` (the physical node of
+  *   [[org.apache.spark.sql.graft.ZonalAggregate]]) that aligns the
+  *   rasters of each key and evaluates every op of the request per
+  *   tile — each raster decoded once into a primitive array, each
+  *   (shape, options) mask rasterized once, TILE-LEVEL PARTIAL
+  *   AGGREGATION into primitive group tables → one tiny final Catalyst
+  *   aggregation.
   *
-  * The flatMap emits one row per (tile, shape, value-tuple) — never
+  * The exec emits one row per (op, tile, shape, value-tuple) — never
   * per pixel — so shuffle volume is O(tiles × groups), not O(pixels):
   * a 100 TB catalog shuffles a few hundred rows per tile regardless of
   * tile size (group cardinality is ≤ ~500 in the reference workload,
   * SURVEY §6). This is the reference's lock-free TrieMap partial
   * aggregation (Geoprocessing.scala:215,302,348,405) relocated into
-  * the task, with Spark's hash aggregation finishing the job.
+  * the task, with Spark's hash aggregation finishing the job; the
+  * exec's SQL metrics (tiles, envelope-skipped pairs, masks, masked
+  * cells, rasterize time) show in `explain` and the SQL UI.
   *
   * NODATA semantics (SURVEY §2.3):
   *  - group values: NODATA (Int.MinValue) groups as itself;
@@ -32,177 +40,56 @@ import graft.sources.TileCatalog.RasterMeta
   *  - summary min/max skip NODATA (as NULL — documented divergence
   *    from the reference's inert NaN guard, Utils.scala:266-284);
   *    summary avg counts every masked pixel with NODATA as 0.0;
-  *  - a tile missing from EVERY layer has no join key → contributes
-  *    no pixels (reference join-keys semantics, Utils.scala:221-232).
+  *  - a tile missing from EVERY raster of an op has no join key for
+  *    that op → contributes no pixels to it, even when another op of
+  *    the same pass reads the tile (reference join-keys semantics,
+  *    Utils.scala:221-232).
   */
 object Zonal {
 
   final case class Layer(meta: RasterMeta, df: DataFrame)
 
-  /** Serializable lazy-parsing geometry holder for broadcast. */
-  private final class BGeom(val wkb: Array[Byte], exmin: Double, eymin: Double,
-                            exmax: Double, eymax: Double) extends Serializable {
-    @transient private var g: Geometry = _
-    def geom: Geometry = {
-      if (g == null) g = GeomOps.fromWkb(wkb)
-      g
-    }
-    /** Envelope rejection: true when this shape's bbox cannot touch the
-      * extent — four double compares, no JTS, no WKB deserialization.
-      * Non-strict (shared edges count as intersecting) so boundary
-      * cells are never wrongly skipped; an empty geometry's inverted
-      * envelope is disjoint from everything, matching its empty mask.
-      */
-    def disjointFrom(e: graft.raster.Extent): Boolean =
-      exmin > e.xmax || exmax < e.xmin || eymin > e.ymax || eymax < e.ymin
-  }
-
-  private def bgeom(g: Geometry): BGeom = {
-    val env = g.getEnvelopeInternal
-    new BGeom(GeomOps.toWkb(g), env.getMinX, env.getMinY, env.getMaxX, env.getMaxY)
-  }
-
-  /** Count of (tile, shape) pairs rejected by the envelope fast-path —
-    * a per-JVM diagnostic for specs (meaningful in local mode; on a
-    * cluster each executor counts its own skips).
+  /** The exec's input: every layer's tiles as `(key_col, key_row, r,
+    * tile_i, tile_d)` rows, `r` the layer's ordinal and its tile in the
+    * column of its cell type. The exec aligns the layers on SpatialKey
+    * itself (reference `joinCollectionLayers`, Utils.scala:221-232): a
+    * layer without a key NODATA-fills, and an op whose layers all lack
+    * it contributes no pixels there.
     */
-  private[graft] val envSkips = new java.util.concurrent.atomic.AtomicLong
-
-  /** Decode a grouping tile to Int values regardless of stored cell
-    * type (reference semantics: grouping rasters are read as Int,
-    * `tile.get` — double cells truncate, NaN → NODATA).
-    */
-  private def decodeIntTile(row: Row, ord: Int): Array[Int] =
-    if (row.isNullAt(ord)) null
-    else row.getSeq[Any](ord).map {
-      case i: Int => i
-      case d: Double => if (d.isNaN) NoData.INT else d.toInt
-      case null => NoData.INT
-    }.toArray
-
-  /** Decode a target tile to Double regardless of stored cell type
-    * (reference `tile.getDouble` — Int NODATA widens to NaN).
-    */
-  private def decodeDoubleTile(row: Row, ord: Int): Array[Double] =
-    if (row.isNullAt(ord)) null
-    else row.getSeq[Any](ord).map {
-      case d: Double => d
-      case i: Int => if (i == NoData.INT) Double.NaN else i.toDouble
-      case null => Double.NaN
-    }.toArray
-
-  /** Hash-map key wrapping a primitive int array. */
-  private final class ValsKey(val a: Array[Int]) {
-    override val hashCode: Int = java.util.Arrays.hashCode(a)
-    override def equals(o: Any): Boolean = o match {
-      case k: ValsKey => java.util.Arrays.equals(a, k.a)
-      case _ => false
-    }
-  }
-
-  /** Per-group accumulator for one (tile, shape). */
-  private final class Agg {
-    var cnt: Long = 0L
-    var sum: Double = 0.0
-    var mn: Double = Double.NaN
-    var mx: Double = Double.NaN
-    def add(tv: Double): Unit = {
-      cnt += 1
-      if (!tv.isNaN) {
-        sum += tv
-        if (mn.isNaN || tv < mn) mn = tv
-        if (mx.isNaN || tv > mx) mx = tv
-      }
-    }
-  }
-
-  /** Full-outer align join of N layers on SpatialKey (reference
-    * `joinCollectionLayers`, Utils.scala:221-232 — missing tiles stay
-    * null here and NODATA-fill inside the flatMap).
-    */
-  private def joinLayers(layers: Seq[Layer]): DataFrame = {
+  private def tileRows(layers: Seq[Layer]): DataFrame = {
     require(layers.nonEmpty, "at least one layer")
     require(layers.map(_.meta.layout).distinct.size == 1,
       s"layers must share one layout: ${layers.map(_.meta.rasterId).mkString(", ")}")
-    val renamed = layers.zipWithIndex.map { case (l, i) =>
-      val valueCol = if (l.meta.isInt) col("tile_i") else col("tile_d")
-      l.df.select(col("key_col"), col("key_row"), valueCol.as(s"t$i"))
-    }
-    renamed.reduce((a, b) => a.join(b, Seq("key_col", "key_row"), "full_outer"))
+    layers.zipWithIndex.map { case (l, i) =>
+      val (ti, td) =
+        if (l.meta.isInt) (col("tile_i"), lit(null).cast("array<double>"))
+        else (lit(null).cast("array<int>"), col("tile_d"))
+      l.df.select(col("key_col"), col("key_row"), lit(i).as("r"), ti.as("tile_i"), td.as("tile_d"))
+    }.reduce(_.union(_))
   }
 
-  private val planeSchema = StructType(Seq(
-    StructField("shape_id", IntegerType, nullable = false),
-    StructField("vals", ArrayType(IntegerType, containsNull = false)),
-    StructField("cnt", LongType, nullable = false),
-    StructField("sum", DoubleType, nullable = false),
-    StructField("mn", DoubleType, nullable = true),
-    StructField("mx", DoubleType, nullable = true)))
-
-  /** Pre-clip the AOI to the tile extent: bounds the scanline to the
-    * tile and keeps per-tile cost proportional to local geometry
-    * complexity (center-sampling is invariant under this clip).
-    * Skipped for PixelIsArea/includePartial=false where artificial
-    * clip edges would wrongly erode interior cells.
+  /** The fused pass over `rasters` (distinct): the partial-aggregate
+    * plane `(op, shape_id, vals, cnt, sum, mn, mx)`, one row per (op,
+    * tile, shape, value tuple); sum/mn/mx aggregate the op's target
+    * under the NODATA rules (sum 0 and null mn/mx for ops without one).
     */
-  private def clipToTile(g: Geometry, re: graft.raster.RasterExtent): Geometry =
-    if (g.getNumGeometries > 0) {
-      val env = g.getFactory.toGeometry(re.extent.toEnvelope)
-      try g.intersection(env) catch { case _: Exception => g }
-    } else g
+  private def fused(layout: Layout, rasters: Seq[Layer], masks: Seq[ZonalMasks],
+                    specs: Seq[ZonalOpSpec]): DataFrame =
+    ZonalAggregate.plane(tileRows(rasters), ZonalWork(layout,
+      rasters.map(_.meta.isInt).toIndexedSeq, masks.toIndexedSeq, specs.toIndexedSeq))
 
-  /** The partially-aggregated masked plane: per (tile, shape,
-    * value-tuple) one row `(shape_id, vals, cnt, sum, mn, mx)` where
-    * sum/mn/mx aggregate the (optional) target under the NODATA rules.
+  private def polygons(aois: Seq[MultiPolygon], opts: Rasterizer.Options): PolygonMasks =
+    PolygonMasks(aois.map(ZonalShape(_)).toIndexedSeq, opts)
+
+  /** The plane of ONE op: group layers read as Int, an optional target
+    * read as Double, masked by each of `aois`.
     */
   private[graft] def aggPlane(layout: Layout, groupLayers: Seq[Layer], target: Option[Layer],
                               aois: Seq[MultiPolygon], opts: Rasterizer.Options): DataFrame = {
-    val joined = joinLayers(groupLayers ++ target.toSeq)
-    val n = groupLayers.size
-    val hasTarget = target.isDefined
-    val shapes = aois.map(bgeom)
-    val lay = layout
-    val o = opts
-    val tileCols = layout.tileCols
-    joined.flatMap { row =>
-      val keyCol = row.getInt(0)
-      val keyRow = row.getInt(1)
-      val re = lay.rasterExtent(keyCol, keyRow)
-      val groups: Array[Array[Int]] = Array.tabulate(n)(i => decodeIntTile(row, 2 + i))
-      val tgt: Array[Double] = if (hasTarget) decodeDoubleTile(row, 2 + n) else null
-      val out = scala.collection.mutable.ArrayBuffer.empty[Row]
-      shapes.zipWithIndex.foreach { case (bg, si) =>
-        // envelope fast-path: a shape whose bbox misses this tile's
-        // extent masks zero cells here — skip the JTS clip + scanline
-        // entirely. At 10⁴-shape batches this turns the per-tile cost
-        // from O(shapes) JTS intersections into O(shapes) double
-        // compares plus work only for genuinely overlapping pairs.
-        if (bg.disjointFrom(re.extent)) Zonal.envSkips.incrementAndGet()
-        else {
-        val accum = scala.collection.mutable.HashMap.empty[ValsKey, Agg]
-        val clipped =
-          if (o.pixelIsArea && !o.includePartial) bg.geom else clipToTile(bg.geom, re)
-        Rasterizer.foreachCellByPolygon(clipped, re, o) { (c, r) =>
-          val vals = new Array[Int](n)
-          var i = 0
-          while (i < n) {
-            vals(i) = if (groups(i) == null) NoData.INT else groups(i)(r * tileCols + c)
-            i += 1
-          }
-          val tv =
-            if (!hasTarget) 0.0
-            else if (tgt == null) Double.NaN
-            else tgt(r * tileCols + c)
-          accum.getOrElseUpdate(new ValsKey(vals), new Agg).add(tv)
-        }
-        accum.foreach { case (k, a) =>
-          out += Row(si, k.a.toSeq, a.cnt, a.sum,
-            if (a.mn.isNaN) null else a.mn, if (a.mx.isNaN) null else a.mx)
-        }
-        }
-      }
-      out
-    }(Encoders.row(planeSchema)).toDF()
+    val rasters = (groupLayers ++ target).distinct
+    fused(layout, rasters, Seq(polygons(aois, opts)),
+      Seq(ZonalOpSpec(groupLayers.map(rasters.indexOf).toIndexedSeq,
+        target.map(rasters.indexOf), 0)))
   }
 
   /** Row A — `rasterGroupedCount` (Geoprocessing.scala:338-368):
@@ -215,9 +102,9 @@ object Zonal {
 
   /** Row F — `getRasterGroupedCountMany` (Geoprocessing.scala:114-126):
     * grouped count per input polygon; every shape rasterizes against
-    * each tile in ONE flatMap pass (shape_id column instead of
-    * per-shape rescans — the reference fetches layers once for the
-    * union AOI, Geoprocessing.scala:116-120).
+    * each tile in ONE pass (shape_id column instead of per-shape
+    * rescans — the reference fetches layers once for the union AOI,
+    * Geoprocessing.scala:116-120).
     */
   def groupedCountMany(spark: SparkSession, layout: Layout, layers: Seq[Layer],
                        aois: Seq[MultiPolygon],
@@ -233,38 +120,42 @@ object Zonal {
   def groupedAverage(spark: SparkSession, layout: Layout, groupLayers: Seq[Layer],
                      target: Layer, aoi: MultiPolygon,
                      opts: Rasterizer.Options = Rasterizer.DEFAULT): DataFrame =
-    keyed(aggPlane(layout, groupLayers, Some(target), Seq(aoi), opts), groupLayers)
-      .groupBy(col("vals"))
+    aggPlane(layout, groupLayers, Some(target), Seq(aoi), opts)
+      .groupBy(keyed.as("vals"))
       .agg((sum(col("sum")) / sum(col("cnt"))).as("avg_v"))
 
   /** Grouped average per shape in one pass (the /multi batch kernel). */
   def groupedAverageMany(spark: SparkSession, layout: Layout, groupLayers: Seq[Layer],
                          target: Layer, aois: Seq[MultiPolygon],
                          opts: Rasterizer.Options = Rasterizer.DEFAULT): DataFrame =
-    keyed(aggPlane(layout, groupLayers, Some(target), aois, opts), groupLayers)
-      .groupBy(col("shape_id"), col("vals"))
+    aggPlane(layout, groupLayers, Some(target), aois, opts)
+      .groupBy(col("shape_id"), keyed.as("vals"))
       .agg((sum(col("sum")) / sum(col("cnt"))).as("avg_v"))
 
   /** Ungrouped ops key on `List(0)` (reference Geoprocessing.scala:275). */
-  private def keyed(plane: DataFrame, groupLayers: Seq[Layer]): DataFrame =
-    if (groupLayers.nonEmpty) plane else plane.withColumn("vals", array(lit(0)))
+  private def keyed = when(size(col("vals")) === 0, array(lit(0))).otherwise(col("vals"))
 
   /** Row E — `rasterSummary` (Geoprocessing.scala:380-431): per input
     * raster (order preserved), min/avg/max over masked pixels; min/max
-    * skip NODATA, avg counts every masked pixel.
+    * skip NODATA, avg counts every masked pixel. One pass with one op
+    * per raster; the global aggregate keeps a (null) row for a raster
+    * that masks nothing.
     */
   def summary(spark: SparkSession, layout: Layout, layers: Seq[Layer],
               aoi: MultiPolygon,
-              opts: Rasterizer.Options = Rasterizer.DEFAULT): DataFrame =
-    layers.zipWithIndex.map { case (l, i) =>
-      aggPlane(layout, Nil, Some(l), Seq(aoi), opts)
-        .agg(
-          min(col("mn")).as("min_v"),
-          max(col("mx")).as("max_v"),
-          (sum(col("sum")) / sum(col("cnt"))).as("avg_v"))
-        .select(lit(i).as("idx"), lit(l.meta.rasterId).as("raster_id"),
-          col("min_v"), col("avg_v"), col("max_v"))
-    }.reduce(_.unionByName(_)).orderBy("idx")
+              opts: Rasterizer.Options = Rasterizer.DEFAULT): DataFrame = {
+    val rasters = layers.distinct
+    val plane = fused(layout, rasters, Seq(polygons(Seq(aoi), opts)),
+      layers.map(l => ZonalOpSpec(IndexedSeq.empty, Some(rasters.indexOf(l)), 0)))
+    val perRaster = layers.zipWithIndex.map { case (l, i) =>
+      def of(c: String) = when(col("op") === i, col(c))
+      struct(lit(i).as("idx"), lit(l.meta.rasterId).as("raster_id"),
+        min(of("mn")).as("min_v"),
+        (sum(of("sum")) / sum(of("cnt"))).as("avg_v"),
+        max(of("mx")).as("max_v"))
+    }
+    plane.agg(array(perRaster: _*).as("r")).select(inline(col("r"))).orderBy("idx")
+  }
 
   /** Row D — `rasterLinesJoin` (Geoprocessing.scala:210-235): count
     * DISTINCT pixels touched by ≥1 line, grouped by value tuple.
@@ -283,38 +174,20 @@ object Zonal {
     */
   def linesJoinMany(spark: SparkSession, layout: Layout, layers: Seq[Layer],
                     linesPerShape: Seq[Seq[MultiLineString]]): DataFrame = {
-    val joined = joinLayers(layers)
-    val n = layers.size
-    val gf = new org.locationtech.jts.geom.GeometryFactory()
-    val perShape: Seq[BGeom] = linesPerShape.map { ls =>
-      val all = ls.flatMap(ml => (0 until ml.getNumGeometries).map(ml.getGeometryN(_)
-        .asInstanceOf[org.locationtech.jts.geom.LineString]))
-      bgeom(gf.createMultiLineString(all.toArray))
-    }
-    val lay = layout
-    val tileCols = layout.tileCols
-    joined.flatMap { row =>
-      val keyCol = row.getInt(0)
-      val keyRow = row.getInt(1)
-      val re = lay.rasterExtent(keyCol, keyRow)
-      val groups: Array[Array[Int]] = Array.tabulate(n)(i => decodeIntTile(row, 2 + i))
-      val out = scala.collection.mutable.ArrayBuffer.empty[Row]
-      perShape.zipWithIndex.foreach { case (bg, si) =>
-        val accum = scala.collection.mutable.HashMap.empty[ValsKey, Agg]
-        Rasterizer.foreachCellByLines(bg.geom, re) { (c, r) =>
-          val vals = new Array[Int](n)
-          var i = 0
-          while (i < n) {
-            vals(i) = if (groups(i) == null) NoData.INT else groups(i)(r * tileCols + c)
-            i += 1
-          }
-          accum.getOrElseUpdate(new ValsKey(vals), new Agg).add(0.0)
-        }
-        accum.foreach { case (k, a) => out += Row(si, k.a.toSeq, a.cnt, 0.0, null, null) }
-      }
-      out
-    }(Encoders.row(planeSchema)).toDF()
+    val rasters = layers.distinct
+    fused(layout, rasters, Seq(lineMasks(linesPerShape)),
+      Seq(ZonalOpSpec(layers.map(rasters.indexOf).toIndexedSeq, None, 0)))
       .groupBy(col("shape_id"), col("vals")).agg(sum(col("cnt")).as("cnt"))
+  }
+
+  /** One multi-line mask per shape (all of the shape's lines merged). */
+  private def lineMasks(linesPerShape: Seq[Seq[MultiLineString]]): LineMasks = {
+    val gf = new org.locationtech.jts.geom.GeometryFactory()
+    LineMasks(linesPerShape.map { ls =>
+      val all = ls.flatMap(ml =>
+        (0 until ml.getNumGeometries).map(ml.getGeometryN(_).asInstanceOf[LineString]))
+      ZonalShape(gf.createMultiLineString(all.toArray))
+    }.toIndexedSeq)
   }
 
   /** Batch op spec for [[multiBatch]]. */
@@ -325,9 +198,10 @@ object Zonal {
                                 opts: Rasterizer.Options = Rasterizer.DEFAULT) extends BatchOp
   final case class BatchLines(label: String, rasters: Seq[String]) extends BatchOp
 
-  /** The /multi batch as ONE unioned DataFrame plan (SURVEY §3.2's
-    * "idiomatic-Spark win"): shared cached scans feed a single-pass
-    * multi-shape plane per op; output is
+  /** The /multi batch as ONE fused pass (SURVEY §3.2's "idiomatic-Spark
+    * win"): every raster the ops name is scanned and exchanged once,
+    * every op is a spec of the same `ZonalAggregateExec`, and polygon masks
+    * are shared by all ops with the same options. Output is
     * `(shape_id, op_label, k, v)` with Ints widened to Double
     * (reference Geoprocessing.scala:56).
     */
@@ -335,23 +209,38 @@ object Zonal {
                  aois: Seq[MultiPolygon],
                  lines: Seq[MultiLineString],
                  ops: Seq[BatchOp]): DataFrame = {
-    val keyExpr = expr("concat('List(', array_join(transform(vals, v -> cast(v as string)), ', '), ')')")
-    val frames = ops.map {
-      case BatchCount(label, rasters, o) =>
-        groupedCountMany(spark, layout, rasters.map(shared), aois, o)
-          .select(col("shape_id"), lit(label).as("op_label"), keyExpr.as("k"),
-            col("cnt").cast("double").as("v"))
-      case BatchAverage(label, rasters, target, o) =>
-        groupedAverageMany(spark, layout, rasters.map(shared), shared(target), aois, o)
-          .select(col("shape_id"), lit(label).as("op_label"), keyExpr.as("k"),
-            col("avg_v").as("v"))
-      case BatchLines(label, rasters) =>
-        val clippedPerShape = aois.map(shape => GeomOps.clipLines(lines, shape))
-        linesJoinMany(spark, layout, rasters.map(shared), clippedPerShape)
-          .select(col("shape_id"), lit(label).as("op_label"), keyExpr.as("k"),
-            col("cnt").cast("double").as("v"))
+    val ids = ops.flatMap {
+      case BatchCount(_, rs, _) => rs
+      case BatchAverage(_, rs, t, _) => rs :+ t
+      case BatchLines(_, rs) => rs
+    }.distinct
+    val polygonOpts = ops.collect {
+      case BatchCount(_, _, o) => o
+      case BatchAverage(_, _, _, o) => o
+    }.distinct
+    val linesAt = polygonOpts.size
+    val masks = polygonOpts.map(polygons(aois, _)) ++
+      (if (ops.exists(_.isInstanceOf[BatchLines]))
+        Seq(lineMasks(aois.map(shape => GeomOps.clipLines(lines, shape))))
+      else Nil)
+    def ix(rs: Seq[String]) = rs.map(ids.indexOf).toIndexedSeq
+    val specs = ops.map {
+      case BatchCount(_, rs, o) => ZonalOpSpec(ix(rs), None, polygonOpts.indexOf(o))
+      case BatchAverage(_, rs, t, o) =>
+        ZonalOpSpec(ix(rs), Some(ids.indexOf(t)), polygonOpts.indexOf(o))
+      case BatchLines(_, rs) => ZonalOpSpec(ix(rs), None, linesAt)
     }
-    frames.reduce(_.unionByName(_))
+    val averages = ops.indices.filter(ops(_).isInstanceOf[BatchAverage])
+    val keyExpr = expr("concat('List(', array_join(transform(vals, v -> cast(v as string)), ', '), ')')")
+    val value =
+      if (averages.isEmpty) col("cnt").cast("double")
+      else when(col("op").isin(averages: _*), col("sum") / col("cnt"))
+        .otherwise(col("cnt").cast("double"))
+    fused(layout, ids.map(shared), masks, specs)
+      .groupBy(col("op"), col("shape_id"), keyed.as("vals"))
+      .agg(sum(col("cnt")).as("cnt"), sum(col("sum")).as("sum"))
+      .select(col("shape_id"), element_at(typedLit(ops.map(_.label)), col("op") + 1).as("op_label"),
+        keyExpr.as("k"), value.as("v"))
   }
 }
 
@@ -375,12 +264,11 @@ object Render {
     }.toSeq
 
   def toResultManyInt(df: DataFrame, nShapes: Int): Seq[Map[String, Int]] = {
-    val grouped = df.collect()
-      .groupBy(_.getInt(df.columns.indexOf("shape_id")))
+    val Seq(shapeAt, valsAt, cntAt) = Seq("shape_id", "vals", "cnt").map(df.columns.indexOf(_))
+    val grouped = df.collect().groupBy(_.getInt(shapeAt))
     (0 until nShapes).map { i =>
       grouped.getOrElse(i, Array.empty)
-        .map(r => listKey(r.getSeq[Int](df.columns.indexOf("vals"))) ->
-          r.getLong(df.columns.indexOf("cnt")).toInt).toMap
+        .map(r => listKey(r.getSeq[Int](valsAt)) -> r.getLong(cntAt).toInt).toMap
     }
   }
 }

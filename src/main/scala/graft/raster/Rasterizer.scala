@@ -15,7 +15,7 @@ import org.locationtech.jts.geom._
   * (Amanatides–Woo grid walk) for PixelIsArea+includePartial; the same
   * grid walk for lines.
   *
-  * Runs per tile inside Spark `flatMap` tasks — no allocation-heavy
+  * Runs per tile inside `ZonalAggregateExec` tasks — no allocation-heavy
   * abstractions, plain index arithmetic on primitive arrays.
   */
 object Rasterizer {

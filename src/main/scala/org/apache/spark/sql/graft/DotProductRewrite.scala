@@ -111,10 +111,14 @@ object DotProductRewriteRule extends Rule[LogicalPlan] {
   }
 }
 
-/** Session extensions installing graft's Catalyst additions. */
+/** Session extensions installing graft's Catalyst additions: the
+  * function set, the dot-product rewrite and the zonal planner
+  * strategy ([[ZonalAggregateStrategy]]).
+  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => DotProductRewriteRule)
+    ext.injectPlannerStrategy(_ => ZonalAggregateStrategy)
     GraftExtensions.functions.foreach(ext.injectFunction)
   }
 }
@@ -254,8 +258,9 @@ object GraftExtensions {
 
   /** Runtime installation for sessions built WITHOUT
     * `spark.sql.extensions` (a static conf): registers the functions in
-    * the session's registry and appends the dot-product rewrite to
-    * `experimental.extraOptimizations`. Idempotent. This is what keeps
+    * the session's registry, appends the dot-product rewrite to
+    * `experimental.extraOptimizations` and the zonal planner strategy
+    * to `experimental.extraStrategies`. Idempotent. This is what keeps
     * every pipeline operator (all hash keys are `graft_md5hi60`-based)
     * usable on an externally-built session via `GraftSession.tune`.
     */
@@ -272,5 +277,9 @@ object GraftExtensions {
         !spark.experimental.extraOptimizations.contains(DotProductRewriteRule))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ DotProductRewriteRule
+    if (!viaExtensions &&
+        !spark.experimental.extraStrategies.contains(ZonalAggregateStrategy))
+      spark.experimental.extraStrategies =
+        spark.experimental.extraStrategies :+ ZonalAggregateStrategy
   }
 }

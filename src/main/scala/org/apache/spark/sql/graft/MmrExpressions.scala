@@ -137,10 +137,13 @@ case class MmrPick(left: Expression, right: Expression)
             // coalesce(maxsim, 0): not-found ⇒ 0, exactly the loop
             if (!found) maxsim = 0L
           }
+          // ANSI-exact like the loop form's `7 * rel - 3 * maxsim`:
+          // overflow throws ArithmeticException instead of wrapping
           val score: java.lang.Long =
             if (rel(i) == null) null
-            else if (k == 0) rel(i) * wRel
-            else wRel * rel(i) - wSim * maxsim
+            else if (k == 0) Math.multiplyExact(rel(i).longValue, wRel)
+            else Math.subtractExact(Math.multiplyExact(wRel, rel(i).longValue),
+              Math.multiplyExact(wSim, maxsim))
           // argmax by (score DESC NULLS LAST, doc ASC) — row_number's
           // order in the loop form
           val better =

@@ -11,6 +11,10 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class Round15Spec extends AnyFunSuite with SparkSpec {
 
+  private def rootIsArithmetic(t: Throwable): Boolean =
+    t != null && (t.isInstanceOf[ArithmeticException] ||
+      rootIsArithmetic(t.getCause))
+
   // ---- long fold kernels ------------------------------------------
   //
   // Reference semantics implemented INDEPENDENTLY in Scala (not via
@@ -90,9 +94,6 @@ class Round15Spec extends AnyFunSuite with SparkSpec {
     val e = intercept[Exception] {
       d.select(expr("graft_dot_long(a, b)")).collect()
     }
-    def rootIsArithmetic(t: Throwable): Boolean =
-      t != null && (t.isInstanceOf[ArithmeticException] ||
-        rootIsArithmetic(t.getCause))
     assert(rootIsArithmetic(e), s"expected arithmetic overflow, got $e")
     val e2 = intercept[Exception] {
       d.select(expr("graft_l2sq_long(a, CAST(array(-9223372036854775808, 1) " +
@@ -268,5 +269,28 @@ class Round15Spec extends AnyFunSuite with SparkSpec {
     // query 1 emits exactly one pick, query 2 five doc-ascending picks
     assert(rb.count(_.head == 1L) == 1)
     assert(rb.filter(_.head == 2L).map(_(2)) == Seq(1L, 3L, 9L, 15L, 27L))
+  }
+
+  test("fused MMR is ANSI-exact: overflowing scores throw like the loop form") {
+    import spark.implicits._
+    // round 1 scores 7·rel: overflows for rel > Long.MaxValue / 7
+    val cand1 = Seq((1L, 5L, Long.MaxValue / 7 + 1), (1L, 6L, 1L))
+      .toDF("query_id", "doc_id", "rel")
+    // round 2 scores 7·rel − 3·maxsim: 3·maxsim overflows
+    val cand2 = Seq((1L, 5L, 10L), (1L, 6L, 1L)).toDF("query_id", "doc_id", "rel")
+    val psim = Seq((1L, 5L, 6L, Long.MaxValue / 3 + 1)).toDF("query_id", "da", "db", "sim")
+    Seq(cand1, cand2).foreach { cand =>
+      val loop = intercept[Exception](mmrLoop(cand, psim).collect())
+      assert(rootIsArithmetic(loop), s"loop form: expected arithmetic overflow, got $loop")
+      val fused = intercept[Exception](mmrFused(cand, psim).collect())
+      assert(rootIsArithmetic(fused), s"kernel: expected arithmetic overflow, got $fused")
+    }
+    // at the edge of the range both forms still agree pick for pick
+    val edge = Seq((1L, 5L, Long.MaxValue / 7), (1L, 6L, Long.MaxValue / 7 - 1),
+      (1L, 7L, 3L)).toDF("query_id", "doc_id", "rel")
+    val edgeSims = Seq((1L, 5L, 6L, Long.MaxValue / 3), (1L, 5L, 7L, 0L), (1L, 6L, 7L, 2L))
+      .toDF("query_id", "da", "db", "sim")
+    assert(mmrFused(edge, edgeSims).collect().map(_.toSeq).toSeq ==
+      mmrLoop(edge, edgeSims).collect().map(_.toSeq).toSeq)
   }
 }

@@ -66,6 +66,6 @@ class Round9Spec extends SparkSpec {
     val big = census(plan(8, 4))
     assert(small == big,
       s"multi plan census varies with shape count: 4-shape=$small vs 32-shape=$big")
-    assert(big.keys.exists(_.contains("Union")), "expected ONE unioned plan")
+    assert(big.get("ZonalAggregateExec").contains(1), s"expected ONE fused zonal pass: $big")
   }
 }

@@ -1,5 +1,10 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graft.ZonalAggregateExec
 import org.scalatest.funsuite.AnyFunSuite
 import org.locationtech.jts.geom.{Coordinate, GeometryFactory}
 
@@ -60,6 +65,15 @@ class ZonalSpec extends AnyFunSuite with SparkSpec {
   }
 
   private val aoi = square(1, 1, 7, 7)
+
+  /** The one fused exec of an executed plan (AQE stages included). */
+  private def zonalExec(df: DataFrame): ZonalAggregateExec = {
+    val execs = new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+      case z: ZonalAggregateExec => z
+    }
+    assert(execs.size == 1, df.queryExecution.executedPlan)
+    execs.head
+  }
 
   test("catalog scan prunes to intersecting tiles") {
     val m = TileCatalog.readMeta(path)("ca")
@@ -209,17 +223,95 @@ class ZonalSpec extends AnyFunSuite with SparkSpec {
     val shapes = cells.map { case (gc, gr) =>
       square(gc + 0.1, gr + 0.1, gc + 0.9, gr + 0.9)
     }
-    val before = Zonal.envSkips.get()
     val df = Zonal.groupedCountMany(spark, layout, Seq(layer("ca")), shapes)
     val rows = df.collect().map(r =>
       (r.getInt(0), r.getSeq[Int](1).head) -> r.getLong(2)).toMap
-    assert(Zonal.envSkips.get() - before == 36)
+    val exec = zonalExec(df)
+    assert(exec.metrics("envelopeSkips").value == 36)
+    assert(exec.metrics("numTiles").value == 4)
+    assert(exec.metrics("numMasks").value == cells.size)
+    assert(exec.metrics("maskedCells").value == cells.size)
     // ca = gc (no picked cell hits the (2,2) NODATA hole): shape i
     // masks one cell of value gc
     cells.zipWithIndex.foreach { case ((gc, _), si) =>
       assert(rows((si, gc)) == 1L, s"shape $si")
     }
     assert(rows.values.sum == cells.size)
+  }
+
+  test("explain names ZonalAggregateExec and its metrics") {
+    val df = Zonal.groupedCount(spark, layout, Seq(layer("ca"), layer("cb")), aoi)
+    val plan = df.queryExecution.explainString(FormattedMode)
+    assert(plan.contains("ZonalAggregateExec"), plan)
+    Seq("number of tiles", "envelope-skipped (tile, shape) pairs", "number of masks",
+      "masked cells", "rasterize time").foreach(m => assert(plan.contains(m), s"$m in\n$plan"))
+  }
+
+  test("multiBatch: an op skips a tile its own rasters lack, even when another op reads it") {
+    // cb lacks tile (1,1) that ca and cd have; shape 1 lies inside it
+    val shapes = Seq(square(1, 5, 4, 7), square(4, 1, 7, 4), square(2.5, 2.5, 5.5, 5.5))
+    val shared = Map("ca" -> layer("ca"), "cb" -> layer("cb"), "cd" -> layer("cd"))
+    val line = gf.createMultiLineString(Array(
+      gf.createLineString(Array(new Coordinate(0.5, 2.5), new Coordinate(7.5, 2.5))),
+      gf.createLineString(Array(new Coordinate(5.5, 0.5), new Coordinate(5.5, 7.5)))))
+    val ops = Seq(
+      Zonal.BatchCount("cnt_cb", Seq("cb")),
+      Zonal.BatchCount("cnt_ca_cb", Seq("ca", "cb")),
+      Zonal.BatchAverage("avg_cd_by_cb", Seq("cb"), "cd"),
+      Zonal.BatchAverage("avg_cd", Seq(), "cd"),
+      Zonal.BatchLines("lines_cb", Seq("cb")),
+      Zonal.BatchCount("cnt_ca_area", Seq("ca"),
+        Rasterizer.Options(includePartial = true, pixelIsArea = true)))
+    val multi = Zonal.multiBatch(spark, layout, shared, shapes, Seq(line), ops)
+      .collect().map(r => (r.getString(1), r.getInt(0), r.getString(2)) -> r.getDouble(3))
+    def render(df: org.apache.spark.sql.DataFrame, v: org.apache.spark.sql.Row => Double) =
+      df.collect().map(r => (r.getInt(0), Render.listKey(r.getSeq[Int](1))) -> v(r)).toMap
+    val cnt = (r: org.apache.spark.sql.Row) => r.getLong(2).toDouble
+    val avg = (r: org.apache.spark.sql.Row) => r.getDouble(2)
+    val alone = Map(
+      "cnt_cb" -> render(Zonal.groupedCountMany(spark, layout, Seq(layer("cb")), shapes), cnt),
+      "cnt_ca_cb" -> render(Zonal.groupedCountMany(spark, layout,
+        Seq(layer("ca"), layer("cb")), shapes), cnt),
+      "avg_cd_by_cb" -> render(Zonal.groupedAverageMany(spark, layout,
+        Seq(layer("cb")), layer("cd"), shapes), avg),
+      "avg_cd" -> render(Zonal.groupedAverageMany(spark, layout, Nil, layer("cd"), shapes), avg),
+      "lines_cb" -> render(Zonal.linesJoinMany(spark, layout, Seq(layer("cb")),
+        shapes.map(s => graft.geom.GeomOps.clipLines(Seq(line), s))), cnt),
+      "cnt_ca_area" -> render(Zonal.groupedCountMany(spark, layout, Seq(layer("ca")), shapes,
+        Rasterizer.Options(includePartial = true, pixelIsArea = true)), cnt))
+    ops.foreach { op =>
+      val got = multi.collect { case ((l, si, k), v) if l == op.label => (si, k) -> v }.toMap
+      val want = alone(op.label)
+      assert(got.keySet == want.keySet, op.label)
+      want.foreach { case (k, v) => assert(math.abs(got(k) - v) <= 1e-12 * math.abs(v), s"${op.label} $k") }
+    }
+    // the join-key rule is what the comparison exercises: cb alone has
+    // no rows for shape 1, ca has
+    assert(!alone("cnt_cb").keys.exists(_._1 == 1))
+    assert(alone("cnt_ca_cb").keys.exists(_._1 == 1))
+    assert(alone("lines_cb").nonEmpty && alone("cnt_ca_area").nonEmpty)
+  }
+
+  test("three group layers (wide key) match a brute-force count") {
+    val df = Zonal.groupedCount(spark, layout, Seq(layer("ca"), layer("cb"), layer("cd")), aoi)
+    val want = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
+    for (gc <- 1 to 6; gr <- 1 to 6) {
+      val a = if (gc == 2 && gr == 2) NoData.INT else gc
+      val b = if (gc >= 4 && gr >= 4) NoData.INT else if (gr < 4) 1 else 2
+      // the double raster reads as Int: NaN → NODATA
+      val d = if (gc == 5 && gr == 5) NoData.INT else gc + gr
+      want(s"List($a, $b, $d)") += 1
+    }
+    assert(Render.toResultInt(df) == want.toMap)
+  }
+
+  test("the plane survives a self-join (attribute dedup)") {
+    val a = Zonal.groupedCountMany(spark, layout, Seq(layer("ca"), layer("cb")),
+      Seq(square(1, 5, 4, 7), square(4, 1, 7, 4)))
+    val joined = a.join(a.select(col("shape_id"), col("vals"), col("cnt").as("c2")),
+      Seq("shape_id", "vals")).collect()
+    assert(joined.length == a.count())
+    assert(joined.forall(r => r.getAs[Long]("cnt") == r.getAs[Long]("c2")))
   }
 
   test("pixelIsArea widens the mask (reference pixelIsArea=true rasters)") {
